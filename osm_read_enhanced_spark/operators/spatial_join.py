@@ -50,13 +50,17 @@ def _tree_cache_get(token: str, build):
 
 def _collect_polygon_layer(polygons: DataFrame):
     """Driver-side: polygon layer → (ids, rings, boxes) plain arrays for
-    broadcast. Layer must be 'small' (admin/landuse scale)."""
-    rows = polygons.select("polygon_id", "lats", "lons").collect()
-    ids = np.array([r.polygon_id for r in rows], dtype=np.int64)
-    rings = [
-        (np.asarray(r.lats, dtype=np.float64), np.asarray(r.lons, dtype=np.float64))
-        for r in rows
-    ]
+    broadcast, collected as Arrow (no per-row Python objects). Layer
+    must be 'small' (admin/landuse scale)."""
+    tbl = polygons.select("polygon_id", "lats", "lons").toArrow()
+    ids = tbl.column("polygon_id").to_numpy().astype(np.int64)
+    coords = []
+    for name in ("lats", "lons"):
+        col = tbl.column(name).combine_chunks()
+        offsets = col.offsets.to_numpy()
+        flat = col.values.to_numpy(zero_copy_only=False).astype(np.float64)
+        coords.append([flat[a:b] for a, b in zip(offsets[:-1], offsets[1:])])
+    rings = list(zip(*coords))
     boxes = np.array(
         [[lo.min(), la.min(), lo.max(), la.max()] for la, lo in rings], dtype=np.float64
     )

@@ -3,9 +3,14 @@ north_star): an image+caption table's geotags are batch-encoded to hex
 (H3-shaped) and S2 cells via vectorized Arrow UDFs, joined to
 OSM-derived polygon layers with the broadcast R-tree point-in-polygon
 operator, assigned slippy Z/X/Y raster tiles, and committed to an
-iceberg-lite table partition-by-partition with per-partition lineage
-(+ df.observe row counts) so a killed job resumes idempotently from the
-last committed partition.
+iceberg-lite table with one staged write, then per-partition atomic
+commits, with per-partition lineage (+ df.observe row counts): the
+enrichment runs once per commit, not once per partition. A killed job
+resumes idempotently: a kill during the staged write commits nothing
+from that run, a kill inside the commit loop keeps the partitions
+already committed, and the rerun commits exactly the missing ones. A
+lineage record's ``wall_ms`` includes the staged-write wall its
+partitions share.
 
 Every stage is an existing, independently-tested operator — this module
 is the composition, not new math:
@@ -14,8 +19,9 @@ is the composition, not new math:
 - PIP: operators.spatial_join.pip_join_broadcast (executor-cached STR
   R-tree, zero shuffle on the image side)
 - tiles: functions.geo.tile_x_col/tile_y_col (pure JVM Column math)
-- checkpointed sink: sources.iceberg_lite.write_partitioned (atomic
-  rename + manifest + left-anti resume)
+- checkpointed sink: sources.iceberg_lite.write_partitioned (one
+  staged partitionBy write, atomic rename per partition + manifest +
+  resume that skips committed partitions)
 
 Scale notes (100 TB shape): the image side is never shuffled until the
 final partition write (cell/tile columns are projections; the PIP join

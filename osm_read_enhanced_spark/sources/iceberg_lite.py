@@ -8,12 +8,19 @@ atomic JSON manifest — the layout stays Iceberg-shaped (partition dirs
 Iceberg catalog could be swapped in on a cluster that has the jars.
 
 Semantics provided (north_rule):
-- write_partitioned: each logical partition lands in its own directory,
-  written via temp-dir + atomic rename; the manifest (JSON, atomic
-  rename) records partition → {files, row_count, wall_ms} lineage.
-- resume: a re-run calls ``uncommitted_partitions`` (or left_anti joins
-  against ``committed_partition_ids``) and only processes the rest —
-  kill/rerun yields byte-identical committed output.
+- write_partitioned: one staged write, then per-partition atomic
+  commits. Every pending partition is written by ONE
+  ``partitionBy`` action into a ``_tmp-<uuid>`` staging directory (the
+  input plan runs once per call, not once per partition); each staged
+  partition directory is then atomically renamed to ``part=<id>`` and
+  its manifest record {files, row_count, observed_rows, wall_ms}
+  written (JSON, atomic rename). ``wall_ms`` includes the staged-write
+  wall the partitions of one call share.
+- resume: a re-run skips the partitions the manifest lists and commits
+  only the rest — kill/rerun yields byte-identical committed output.
+  Granularity: a kill during the staged write commits nothing from that
+  run; a kill inside the commit loop keeps the partitions already
+  committed. Either way the rerun commits exactly the missing ones.
 - snapshots: every commit appends a snapshot entry; ``read_table``
   reads only committed partitions as of the latest snapshot.
 """
@@ -22,11 +29,12 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "_manifest.json"
@@ -64,8 +72,7 @@ class _manifest_lock:
     lock file itself is never unlinked. A leftover ``.lock`` file from a
     dead run is inert (the flock died with the process)."""
 
-    def __init__(self, table_path: str, timeout_s: float = 30.0, stale_s: float = 60.0):
-        # stale_s retained for API compat; unused (flock needs no staleness)
+    def __init__(self, table_path: str, timeout_s: float = 30.0):
         self.path = _manifest_path(table_path) + ".lock"
         self.timeout_s = timeout_s
         self._fd: int | None = None
@@ -107,63 +114,108 @@ def committed_partition_ids(table_path: str) -> list:
     return sorted(read_manifest(table_path)["partitions"].keys())
 
 
-def write_partition(
-    df: DataFrame,
-    table_path: str,
-    partition_id: str,
-    metrics: dict | None = None,
-) -> dict:
-    """Write one logical partition atomically; idempotent (already
-    committed → no-op). Returns the lineage record.
+def _data_files(part_dir: str) -> list[str]:
+    return sorted(f for f in os.listdir(part_dir) if f.endswith(".parquet"))
 
-    Per-stage metrics land via ``df.observe`` (SURVEY §2.6 A4): the
-    write action itself reports the rows that flowed through the plan
-    (``observed_rows``), cross-checked against the re-read file count
-    (``row_count``) — a mismatch means files were dropped/duplicated
+
+# Spark writes a partition value into its directory name with every
+# reserved character as %XX (``%`` itself included)
+_ESCAPED = re.compile(r"%([0-9A-F]{2})")
+
+
+def _staged_dirs(stage_dir: str) -> dict[str, str]:
+    """partition value → its directory in a ``partitionBy`` write of one
+    column (names listed and unescaped, never rebuilt from the value)."""
+    out = {}
+    for name in os.listdir(stage_dir):
+        _, eq, value = name.partition("=")  # a literal '=' is escaped
+        if eq:
+            out[_ESCAPED.sub(lambda m: chr(int(m.group(1), 16)), value)] = (
+                os.path.join(stage_dir, name))
+    return out
+
+
+def _stage_and_commit(
+    df: DataFrame, table_path: str, key_col: str, pending: list[str]
+) -> list[dict]:
+    """Write every ``pending`` value of the string column ``key_col`` in
+    one staged ``partitionBy`` action, then commit each partition
+    atomically, in ``pending`` order. Returns the lineage records.
+
+    Per-partition metrics land via ``df.observe`` (SURVEY §2.6 A4): the
+    write action itself reports the rows of each partition that flowed
+    through the plan (``observed_rows``), cross-checked against the rows
+    in the staged files' Parquet footers (``row_count``) before anything
+    is committed — a mismatch means files were dropped/duplicated
     between plan and disk."""
-    manifest = read_manifest(table_path)
-    if partition_id in manifest["partitions"]:
-        return manifest["partitions"][partition_id]
-    os.makedirs(table_path, exist_ok=True)
-    final_dir = os.path.join(table_path, f"part={partition_id}")
-    tmp_dir = os.path.join(table_path, f"_tmp-{partition_id}-{uuid.uuid4().hex}")
-    t0 = time.time()
-    from pyspark.sql import Observation
+    import pyarrow.parquet as pq
 
-    obs = Observation(f"lineage-{partition_id}")
-    df = df.observe(obs, F.count(F.lit(1)).alias("observed_rows"))
-    df.write.mode("overwrite").parquet(tmp_dir)
-    observed_rows = int(obs.get["observed_rows"])
-    row_count = df.sparkSession.read.parquet(tmp_dir).count()
-    if os.path.exists(final_dir):
-        shutil.rmtree(final_dir)
-    os.replace(tmp_dir, final_dir)
-    record = {
-        "partition": partition_id,
-        "row_count": row_count,
-        "observed_rows": observed_rows,
-        "wall_ms": int((time.time() - t0) * 1000),
-        "files": sorted(
-            f for f in os.listdir(final_dir) if f.endswith(".parquet")
-        ),
-        **(metrics or {}),
-    }
-    if observed_rows != row_count:  # pragma: no cover - corruption guard
-        raise ValueError(
-            f"{table_path} part={partition_id}: observed {observed_rows} rows "
-            f"in the write plan but {row_count} on disk"
-        )
-    with _manifest_lock(table_path):
-        manifest = read_manifest(table_path)  # re-read under the lock
-        manifest["partitions"][partition_id] = record
-        manifest["snapshots"].append(
-            {
-                "snapshot_id": len(manifest["snapshots"]) + 1,
-                "committed": partition_id,
-                "ts_ms": int(time.time() * 1000),
-            }
-        )
-        _write_manifest_atomic(table_path, manifest)
+    os.makedirs(table_path, exist_ok=True)
+    stage_dir = os.path.join(table_path, f"_tmp-{uuid.uuid4().hex}")
+    t0 = time.time()
+    obs = Observation()
+    df.observe(
+        obs,
+        *[F.count_if(F.col(key_col) == p).alias(f"rows_{i}") for i, p in enumerate(pending)],
+    ).write.partitionBy(key_col).mode("overwrite").parquet(stage_dir)
+    observed = [obs.get[f"rows_{i}"] for i in range(len(pending))]
+    staged = _staged_dirs(stage_dir)
+    for i, p in enumerate(pending):
+        if p not in staged:  # no rows, so no directory: stage a schema-only file
+            staged[p] = os.path.join(stage_dir, f"_empty-{i}")
+            df.drop(key_col).limit(0).write.parquet(staged[p])
+    row_counts = [
+        sum(pq.read_metadata(os.path.join(staged[p], f)).num_rows
+            for f in _data_files(staged[p]))
+        for p in pending
+    ]
+    for p, seen, rows in zip(pending, observed, row_counts):
+        if seen != rows:  # pragma: no cover - corruption guard
+            raise ValueError(
+                f"{table_path} part={p}: observed {seen} rows "
+                f"in the write plan but {rows} on disk"
+            )
+    stage_s = time.time() - t0
+    records = []
+    for p, seen, rows in zip(pending, observed, row_counts):
+        t1 = time.time()
+        final_dir = os.path.join(table_path, f"part={p}")
+        if os.path.exists(final_dir):
+            shutil.rmtree(final_dir)
+        os.replace(staged[p], final_dir)
+        record = {
+            "partition": p,
+            "row_count": rows,
+            "observed_rows": seen,
+            "wall_ms": int((stage_s + time.time() - t1) * 1000),
+            "files": _data_files(final_dir),
+        }
+        with _manifest_lock(table_path):
+            manifest = read_manifest(table_path)  # re-read under the lock
+            manifest["partitions"][p] = record
+            manifest["snapshots"].append(
+                {
+                    "snapshot_id": len(manifest["snapshots"]) + 1,
+                    "committed": p,
+                    "ts_ms": int(time.time() * 1000),
+                }
+            )
+            _write_manifest_atomic(table_path, manifest)
+        records.append(record)
+    shutil.rmtree(stage_dir)
+    return records
+
+
+def write_partition(df: DataFrame, table_path: str, partition_id: str) -> dict:
+    """Write one logical partition atomically; idempotent (already
+    committed → no-op). Returns the lineage record."""
+    committed = read_manifest(table_path)["partitions"]
+    if partition_id in committed:
+        return committed[partition_id]
+    key = "_iceberg_lite_partition"
+    (record,) = _stage_and_commit(
+        df.withColumn(key, F.lit(partition_id)), table_path, key, [partition_id]
+    )
     return record
 
 
@@ -174,19 +226,39 @@ def write_partitioned(
     resume: bool = True,
 ) -> list[dict]:
     """Commit each distinct value of ``partition_col`` as one atomic
-    partition. With ``resume=True``, already-committed partitions are
-    skipped (left_anti against the manifest) — the idempotent-resume
-    path of the north rule."""
-    values = [r[0] for r in df.select(partition_col).distinct().orderBy(partition_col).collect()]
-    done = set(committed_partition_ids(table_path)) if resume else set()
+    partition, id = the value cast to string. With ``resume=True``,
+    already-committed partitions are skipped — the idempotent-resume
+    path of the north rule; with ``resume=False`` their manifest records
+    are returned alongside the new ones.
+
+    One cheap ``distinct`` job lists the values (it reads only the
+    columns ``partition_col`` derives from), then one staged write
+    commits every value the manifest does not list yet. A null value
+    raises before anything is written."""
+    key = F.col(partition_col).cast("string")
+    # distinct over the bare column, so the optimizer drops outer joins
+    # that do not feed it (the enrichment's PIP side); ordered on the
+    # driver, which costs no range-partitioning jobs
+    values = df.select(partition_col).distinct().select(partition_col, key).collect()
+    if any(v is None for v, _ in values):
+        n_null = df.filter(F.col(partition_col).isNull()).count()
+        raise ValueError(
+            f"{table_path}: {n_null} rows have a null partition value in "
+            f"column {partition_col!r}"
+        )
+    pids = [pid for _, pid in sorted(values)]
+    done = read_manifest(table_path)["partitions"]
+    pending = [p for p in pids if p not in done]
     records = []
-    for v in values:
-        pid = str(v)
-        if pid in done:
-            continue
-        part_df = df.filter(F.col(partition_col) == v).drop(partition_col)
-        records.append(write_partition(part_df, table_path, pid))
-    return records
+    if pending:
+        keyed = df.withColumn(partition_col, key)
+        if len(pending) < len(pids):
+            keyed = keyed.filter(F.col(partition_col).isin(pending))
+        records = _stage_and_commit(keyed, table_path, partition_col, pending)
+    if resume:
+        return records
+    committed = read_manifest(table_path)["partitions"]
+    return [committed[p] for p in pids]
 
 
 def read_table(

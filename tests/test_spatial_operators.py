@@ -123,6 +123,34 @@ def test_pip_broadcast_matches_bruteforce(spark, pip_setup):
     assert got == _expected_pairs(pts)
 
 
+def test_polygon_layer_collect_matches_row_collect(spark, pip_setup):
+    """The Arrow-collected broadcast layer equals a per-Row collect:
+    same int64 ids, float64 rings and bboxes, in the same order; a
+    float32 layer widens exactly."""
+    from osm_read_enhanced_spark.operators.spatial_join import _collect_polygon_layer
+
+    _, layer, _ = pip_setup
+    f32 = spark.createDataFrame(
+        [(1, [1.5, 2.25, 3.0], [4.0, 5.0, 6.125]), (7, [0.1, 0.3], [0.2, -0.7])],
+        "polygon_id int, lats array<float>, lons array<float>",
+    )
+    for polygons in (layer, layer.unionByName(layer), f32, layer.limit(0)):
+        rows = polygons.select("polygon_id", "lats", "lons").collect()
+        want_rings = [(np.asarray(r.lats, dtype=np.float64),
+                       np.asarray(r.lons, dtype=np.float64)) for r in rows]
+        ids, rings, boxes = _collect_polygon_layer(polygons)
+        assert ids.dtype == np.int64
+        assert ids.tolist() == [r.polygon_id for r in rows]
+        assert len(rings) == len(want_rings)
+        for (la, lo), (wla, wlo) in zip(rings, want_rings):
+            assert la.dtype == lo.dtype == np.float64
+            assert np.array_equal(la, wla) and np.array_equal(lo, wlo)
+        assert boxes.dtype == np.float64
+        assert np.array_equal(boxes, np.array(
+            [[lo.min(), la.min(), lo.max(), la.max()] for la, lo in want_rings],
+            dtype=np.float64))
+
+
 def test_pip_cells_matches_broadcast(spark, pip_setup):
     points, layer, pts = pip_setup
     got = {
