@@ -7,12 +7,14 @@ Two physical strategies, chosen by polygon-layer size:
   shared STR R-tree and probes it per Arrow batch, ray-casting only the
   bbox candidates. Zero shuffle on the fact side; scales to any number
   of points. Right choice while polygons ≤ a few hundred MB.
-- ``pip_join_cells`` — for huge polygon layers: polygons explode their
-  hex covering cells, points compute their cell, equi-join on the cell
-  (shuffle, AQE-skew-aware), then exact ray-cast refine per matched
+- ``pip_join_cells`` — for huge polygon layers: each polygon is
+  polyfilled to its hex covering cells at the join's own ``res`` and
+  exploded, points compute their cell at that ``res``, equi-join on the
+  cell (shuffle, AQE-skew-aware), then exact ray-cast refine per matched
   pair. Shuffles scale with candidate pairs, not |points| × |polygons|.
 
-Both refine with the same vectorized kernel; results are identical.
+Both take the same plain ``(polygon_id, lats, lons)`` polygon frame and
+refine with the same vectorized kernel; results are identical.
 """
 
 from __future__ import annotations
@@ -158,7 +160,7 @@ def pip_join_broadcast(
 
 def pip_join_cells(
     points: DataFrame,
-    polygon_layer: DataFrame,
+    polygons: DataFrame,
     res: int = 7,
     point_id_col: str = "point_id",
     lat_col: str = "lat",
@@ -167,7 +169,8 @@ def pip_join_cells(
 ) -> DataFrame:
     """Cell-coarse equi-join + exact refine → (point_id, polygon_id).
 
-    ``polygon_layer`` needs covering_cells (see build_polygon_layer).
+    ``polygons`` (polygon_id, lats, lons) are polyfilled at ``res``
+    here, so the cover always matches the points' cells.
     ``salt_buckets`` > 0 adds an explicit salt on the cell key for
     pathologically hot cells (dense-city skew) on top of AQE skew-join.
     """
@@ -192,8 +195,22 @@ def pip_join_cells(
         .repartition(python_parallelism(points.sparkSession))
         .mapInPandas(add_cell, cell_schema)
     )
-    poly_cells = polygon_layer.select(
-        "polygon_id", "lats", "lons", F.explode("covering_cells").alias("cell")
+    rings = polygons.select("polygon_id", "lats", "lons")
+    cover_schema = T.StructType(
+        [*rings.schema.fields, T.StructField("cells", T.ArrayType(T.LongType()), False)]
+    )
+
+    def add_cover(it):
+        for pdf in it:
+            yield pdf.assign(cells=[
+                hexgrid.polyfill(
+                    np.asarray(la, dtype=np.float64), np.asarray(lo, dtype=np.float64), res
+                ).tolist()
+                for la, lo in zip(pdf["lats"], pdf["lons"])
+            ])
+
+    poly_cells = rings.mapInPandas(add_cover, cover_schema).select(
+        "polygon_id", "lats", "lons", F.explode("cells").alias("cell")
     )
     if salt_buckets > 0:
         # replicate polygon side per salt; points pick one salt
@@ -248,9 +265,10 @@ def pip_join_with_holes(
     ``left_anti`` on (point_id, polygon_id) subtracts hole hits — no
     new refine kernel, both legs keep their plan shape (broadcast
     R-tree or cell equi-join + AQE), and the anti-join shuffles only
-    O(|matches|) narrow rows. Build the layers by role:
-    ``build_polygon_layer(rings.filter(role == 'outer'))`` /
-    ``...('inner')`` from ``relation_multipolygons`` output.
+    O(|matches|) narrow rows. Both layers are plain (polygon_id, lats,
+    lons) frames, for either strategy: split ``relation_multipolygons``
+    output by role, ``rings.filter(role == 'outer')`` /
+    ``...('inner')``.
     """
     if strategy is None:
         strategy = pip_join_broadcast

@@ -39,7 +39,6 @@ def enrich_images(
     images: DataFrame,
     polygons: DataFrame | None = None,
     hex_res: int = 8,
-    s2_level: int = 10,
     tile_zoom: int = 12,
     id_col: str = "image_id",
     lat_col: str = "lat",
@@ -49,8 +48,7 @@ def enrich_images(
 
     ``polygons`` (polygon_id, lats, lons) joins via broadcast R-tree
     PIP; images outside every polygon keep polygon_id NULL (left join —
-    rows are never dropped). ``s2_level`` is fixed at 10 by the shipped
-    UDF; other levels via functions.s2 directly.
+    rows are never dropped).
     """
     from ..functions.geo import tile_x_col, tile_y_col
     from .. import plans  # noqa: F401  (udfs import registers pandas UDFs)

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .blocks import scan_blocks
+from .blocks import BlockMeta, read_block_payload, scan_blocks
 from .decode import (
     NODE_META,
     count_block_elements,
@@ -136,20 +136,6 @@ def pbf_block_index(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     return files_df.repartition(len(paths)).mapInPandas(scan_partition, BLOCK_INDEX_SCHEMA)
 
 
-def _read_block_checked(path: str, block_id, offset, size) -> bytes:
-    """Seek+read one blob payload with the truncation guard (shared by
-    the decode and count paths)."""
-    with open(path, "rb") as f:
-        f.seek(int(offset))
-        raw = f.read(int(size))
-    if len(raw) < int(size):
-        raise ValueError(
-            f"{path}: truncated blob {block_id} (expected {size} bytes "
-            f"at offset {offset}, got {len(raw)})"
-        )
-    return raw
-
-
 def _select_data_blocks(
     spark, paths, block_index, partitions, max_blocks, byte_budget
 ) -> DataFrame:
@@ -162,7 +148,7 @@ def _select_data_blocks(
     """
     if block_index is None:
         # cache: the per-file header walk runs once, not once per action.
-        # Released via release_pbf(dfs) / open_pbf(...) — read_pbf threads
+        # Released via release_pbf(dfs) — read_pbf threads
         # the cached index through the returned dict for that purpose.
         block_index = pbf_block_index(spark, paths).cache()
     index = block_index
@@ -246,7 +232,9 @@ def read_pbf_union(
             for path, block_id, offset, size in zip(
                 d["path"], d["block_id"], d["offset"], d["size"]
             ):
-                raw = _read_block_checked(path, block_id, offset, size)
+                raw = read_block_payload(
+                    BlockMeta(path, int(block_id), "OSMData", int(offset), int(size))
+                )
                 for rb in decode_blob_to_batches(
                     raw, int(block_id), mode=mode, kinds=kinds, want_info=want_info
                 ):
@@ -315,7 +303,7 @@ def read_pbf(
     for kind in kinds:
         out[kind + "s"] = union.filter(F.col("kind") == kind).select(*_KIND_COLS[kind])
     # expose the shared (possibly persisted) union + cached index so
-    # callers can release storage: release_pbf(dfs) or `with open_pbf(...)`
+    # callers can release storage: release_pbf(dfs)
     out["union"] = union
     out["_block_index"] = block_index
     return out
@@ -328,26 +316,6 @@ def release_pbf(dfs: dict) -> None:
         df = dfs.get(key)
         if df is not None:
             df.unpersist()
-
-
-class open_pbf:
-    """Context-managed ``read_pbf``: storage (persisted union + cached
-    block index) is released on exit — the ergonomic path for long-lived
-    sessions doing many reads.
-
-    >>> with open_pbf(spark, path, kinds=("node", "way")) as dfs:
-    ...     dfs["nodes"].count()
-    """
-
-    def __init__(self, spark, paths, **kwargs):
-        self._dfs = read_pbf(spark, paths, **kwargs)
-
-    def __enter__(self):
-        return self._dfs
-
-    def __exit__(self, *exc):
-        release_pbf(self._dfs)
-        return False
 
 
 def count_elements(
@@ -388,7 +356,9 @@ def count_elements(
             for path, block_id, offset, size in zip(
                 pdf["path"], pdf["block_id"], pdf["offset"], pdf["size"]
             ):
-                raw = _read_block_checked(path, block_id, offset, size)
+                raw = read_block_payload(
+                    BlockMeta(path, int(block_id), "OSMData", int(offset), int(size))
+                )
                 n_nodes, n_ways, n_rels, n_cs = count_block_elements(decode_blob(raw))
                 rows.append((path, int(block_id), n_nodes, n_ways, n_rels, n_cs))
             yield pd.DataFrame(
@@ -405,7 +375,6 @@ def count_elements(
 def read_pbf_header(path: str) -> dict:
     """Decode the OSMHeader block (bbox/features/writingprogram) —
     driver-side, tiny."""
-    from .blocks import read_block_payload
     from .decode import decode_header_block
 
     for b in scan_blocks(path, max_blocks=4):

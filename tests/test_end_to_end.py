@@ -28,7 +28,7 @@ def pipeline(spark, tmp_path_factory):
     geoms = assemble_way_geometries(dfs["ways"], dfs["nodes"], broadcast_nodes=True).cache()
     rings = relation_multipolygons(dfs["relations"], geoms)
     layer = build_polygon_layer(
-        rings.select("polygon_id", "tags", "lats", "lons"), cover_res=7
+        rings.select("polygon_id", "tags", "lats", "lons")
     ).cache()
     rng = np.random.default_rng(7)
     pts = [
@@ -47,7 +47,6 @@ def test_admin_polygon_assembled_from_relation(pipeline):
     p = rows[0]
     assert p.kind == "admin"
     assert p.tags["boundary"] == "administrative"
-    assert len(p.covering_cells) > 0
     assert p.minlat < -25.066 < p.maxlat
 
 
@@ -131,11 +130,9 @@ def test_multipolygon_hole_pip_end_to_end(spark, tmp_path):
     rings = relation_multipolygons(dfs["relations"], geoms).cache()
     outer_layer = build_polygon_layer(
         rings.filter(F.col("role") == "outer").select("polygon_id", "tags", "lats", "lons"),
-        cover_res=6,
     )
     inner_layer = build_polygon_layer(
         rings.filter(F.col("role") == "inner").select("polygon_id", "tags", "lats", "lons"),
-        cover_res=6,
     )
     pts = spark.createDataFrame(
         [

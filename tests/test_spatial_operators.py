@@ -88,7 +88,7 @@ def test_closed_way_polygons(spark, osm_dfs):
 def pip_setup(spark, osm_dfs):
     nodes, ways = osm_dfs
     polys = closed_way_polygons(assemble_way_geometries(ways, nodes), kinds=["landuse"])
-    layer = build_polygon_layer(polys, cover_res=7).cache()
+    layer = build_polygon_layer(polys).cache()
     pts = [
         (int(i), float(lat), float(lon))
         for i, (lat, lon) in enumerate(
@@ -167,6 +167,40 @@ def test_pip_cells_salted_same_result(spark, pip_setup):
         for r in pip_join_cells(points, layer, res=7, salt_buckets=4).collect()
     }
     assert got == _expected_pairs(pts)
+
+
+def test_pip_cells_any_res_matches_broadcast_on_plain_frame(spark, pip_setup):
+    """The cell join derives its cover from its own ``res``: on a plain
+    (polygon_id, lats, lons) frame every resolution gives the broadcast
+    result and the brute force, never a silently empty join."""
+    points, _, pts = pip_setup
+    plain = spark.createDataFrame(
+        [(100, [0.0, 0.0, 1.0, 1.0], [0.0, 1.0, 1.0, 0.0]),
+         (101, [2.0, 2.0, 3.0], [2.0, 3.0, 2.5])],
+        "polygon_id long, lats array<double>, lons array<double>",
+    )
+    want = _expected_pairs(pts)
+    broadcast = {(r.point_id, r.polygon_id) for r in pip_join_broadcast(points, plain).collect()}
+    assert broadcast == want and len(want) > 0
+    for res in (5, 7, 9):
+        got = {(r.point_id, r.polygon_id)
+               for r in pip_join_cells(points, plain, res=res).collect()}
+        assert got == want, res
+
+
+def test_polygon_layer_has_no_python_stage(spark, osm_dfs):
+    """build_polygon_layer is column math only: no Python UDF or
+    mapIn* node in its executed plan."""
+    nodes, ways = osm_dfs
+    layer = build_polygon_layer(
+        closed_way_polygons(assemble_way_geometries(ways, nodes), kinds=["landuse"])
+    )
+    plan = layer._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython"):
+        assert node not in plan, plan
+    assert layer.columns == [
+        "polygon_id", "kind", "tags", "lats", "lons", "minlat", "minlon", "maxlat", "maxlon"
+    ]
 
 
 def test_knn_ring_matches_bruteforce_when_dense(spark):
@@ -303,7 +337,7 @@ def test_salting_spreads_hot_cell_key(spark):
         "polygon_id long, lats array<double>, lons array<double>, tags map<string,string>",
     )
     layer = build_polygon_layer(
-        poly.selectExpr("polygon_id", "tags", "lats", "lons"), cover_res=7
+        poly.selectExpr("polygon_id", "tags", "lats", "lons")
     ).cache()
     plain = {(r.point_id, r.polygon_id)
              for r in pip_join_cells(pts, layer, res=7).collect()}
@@ -352,8 +386,6 @@ def test_auto_resolution_scales_with_density(spark):
 def test_pip_join_with_holes(spark):
     """Outer square [0,10]² with hole [3,7]²: even-odd containment via
     the left_anti composition equals the plain range predicate."""
-    from pyspark.sql import functions as F
-
     from osm_read_enhanced_spark.operators.spatial_join import (
         pip_join_broadcast,
         pip_join_cells,
@@ -387,12 +419,10 @@ def test_pip_join_with_holes(spark):
     # inner_layer=None degrades to the plain join
     plain = {r.point_id for r in pip_join_with_holes(pts, outer, None).collect()}
     assert plain > got
-    # works with the cell-join strategy too (build_polygon_layer adds cells)
-    ol = build_polygon_layer(outer.withColumn("tags", F.create_map().cast("map<string,string>")), cover_res=5)
-    hl = build_polygon_layer(holes.withColumn("tags", F.create_map().cast("map<string,string>")), cover_res=5)
+    # works with the cell-join strategy too, on the same plain frames
     cells = {
         r.point_id
-        for r in pip_join_with_holes(pts, ol, hl, strategy=pip_join_cells, res=5).collect()
+        for r in pip_join_with_holes(pts, outer, holes, strategy=pip_join_cells, res=5).collect()
     }
     assert cells == want
 

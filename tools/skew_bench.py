@@ -19,7 +19,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
-from pyspark.sql import functions as F
 
 
 def build_hot_points(spark, n: int, hot_frac: float = 0.8):
@@ -49,8 +48,6 @@ def build_hot_points(spark, n: int, hot_frac: float = 0.8):
 def build_hot_layer(spark, n_polys: int):
     """n_polys overlapping squares all covering the hot cell → per-cell
     polygon fan-out that multiplies the hot key's candidate rows."""
-    from osm_read_enhanced_spark.operators.polygons import build_polygon_layer
-
     rows = []
     for p in range(n_polys):
         d = 0.004 + 0.0001 * p
@@ -62,10 +59,9 @@ def build_hot_layer(spark, n_polys: int):
                 [lon0, lon0 + d * 2, lon0 + d * 2, lon0, lon0],
             )
         )
-    rings = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, "polygon_id long, lats array<double>, lons array<double>"
     )
-    return build_polygon_layer(rings.withColumn("tags", F.create_map(F.lit("admin_level"), F.lit("8"))), cover_res=7)
 
 
 def main():
